@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -25,77 +23,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     LocalCatalog.reset() // Derby/warehouse are per-session scratch (round-13)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    // Shuffle sizing scales with the decade instead of pinning 32
-    // everywhere: spark.sql.shuffle.partitions stays = cpus (the
-    // pinned floor and the unchanged sf0.1 cross-round config), but
-    // AQE starts every shuffle at an input-scaled initial partition
-    // count and coalesces down to its 64 MB advisory target at
-    // runtime. The initial count assumes up to ~8× on-wire expansion
-    // of the compressed parquet input (shingle/pair explodes are the
-    // shuffle-heavy stages), clamped to [cpus, 1024] — at sf0.1 this
-    // IS cpus (no behavior change); at sf10 the multi-hundred-million
-    // row sorts start at ~185 partitions rather than 32.
-    val inputBytes = {
-      val root = java.nio.file.Paths.get(sfDir)
-      val walk = java.nio.file.Files.walk(root)
-      try walk.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(java.nio.file.Files.size(_)).sum()
-      finally walk.close()
-    }
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val initialParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-      math.min(1024L, math.max(cpus.toLong, inputBytes * 8 / (64L << 20))).toString)
-    // Broadcast policy (round-9, the NOTES-recorded cluster alternative):
-    // static auto-broadcasts OFF (threshold -1) so Catalyst can never
-    // commit to a broadcast from a pre-execution size GUESS — the class
-    // of bug that killed d07 at sf3 (post-agg estimate shrank below the
-    // threshold, real size was 10 GiB, AQE cannot demote a static
-    // broadcast). Instead AQE upgrades sort-merge joins to broadcast at
-    // RUNTIME from real materialized stage sizes (adaptive threshold
-    // 8m), which recovers the small-scale broadcast wins cliff-free:
-    // a side that outgrows the threshold simply stays sort-merge.
-    // Explicit broadcast()/merge hints still win over both knobs.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", initialParts)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_AUTO_BROADCAST", "-1"))
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_ADAPTIVE_BROADCAST", "8m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Generated-class cache sized to the suite (round-19, guide §1:
-      // measure the QUERIES, not compilation): the default
-      // spark.sql.codegen.cache.maxEntries=100 holds fewer codegen
-      // units than ONE pass over the 103-query suite produces, so
-      // under interleaved windows every window re-Janino-compiles and
-      // re-JITs every WholeStageCodegen/expression class — measured as
-      // monotonically-declining window totals (194.7/158.3/132.1 s)
-      // whose medians price compilation, not computation. 4096 entries
-      // keeps each distinct generated class compiled once per session;
-      // the same setting is the production posture for any multi-query
-      // service JVM (the cache is LRU-bounded either way).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      // Shuffle-scratch hygiene for long multi-query sessions: shuffle
-      // files are only deleted when ContextCleaner GCs their stage
-      // references, and the default periodic-GC interval (30 min) lets
-      // a 70-query decade run ACCUMULATE every query's spill on disk —
-      // measured at sf30, one query's retained shuffle files reached
-      // 33 GiB and the third decade died on ENOSPC, not on memory or
-      // plan shape. A 2-minute periodic GC bounds scratch at roughly
-      // the working set of the current query; same reasoning applies
-      // to long-lived sessions on real clusters (executor local disks
-      // fill with dead shuffle files between jobs).
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "2min"))
-      .getOrCreate()
+    val spark = GraftSession.builder(Some(sfDir)).getOrCreate()
+    val initialParts =
+      spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
     spark.sparkContext.setLogLevel("WARN")
     // Stage-metrics telemetry (round-16, VERDICT item 1): per-query
     // spill and shuffle volumes, so a super-linear decade growth is
@@ -172,24 +104,20 @@ object Bench {
     // clearCache() still runs before every timed execution, so no DATA
     // computed here can leak into a timed window; fixture builds
     // (StandingFixtures/Ivf) land here and stay attributed via their
-    // fixture.*_build_ms telemetry. Disable with
-    // SPARK_GRAFT_BENCH_WARM=0 to reproduce cold-window numbers.
-    val warmPass = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "1") != "0"
-    if (warmPass) {
-      for ((name, fn) <- selected) {
-        spark.catalog.clearCache()
-        Telemetry.drain()
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] warm-up $name failed: ${e.getMessage}")
-        }
-        // keep ONLY the convergence/fixture counters (fixture builds
-        // happen here now — their build_ms attribution must survive);
-        // bench.* volume counters from the warm pass are discarded so
-        // the summed shuffle/spill volumes keep meaning "timed windows"
-        telBy(name) = mergeTel(telBy.getOrElse(name, Map.empty),
-          Telemetry.drain().filterNot(_._1.startsWith("bench.")))
+    // fixture.*_build_ms telemetry.
+    for ((name, fn) <- selected) {
+      spark.catalog.clearCache()
+      Telemetry.drain()
+      try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warm-up $name failed: ${e.getMessage}")
       }
+      // keep ONLY the convergence/fixture counters (fixture builds
+      // happen here now — their build_ms attribution must survive);
+      // bench.* volume counters from the warm pass are discarded so
+      // the summed shuffle/spill volumes keep meaning "timed windows"
+      telBy(name) = mergeTel(telBy.getOrElse(name, Map.empty),
+        Telemetry.drain().filterNot(_._1.startsWith("bench.")))
     }
     // per-execution telemetry merge: cumulative bench.* volume counters
     // SUM across windows (preserving the former "summed over all runs"

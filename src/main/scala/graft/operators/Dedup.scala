@@ -687,7 +687,7 @@ object Dedup {
       .filter(col("__side") === 1)
       .join(overCapKeys.hint("shuffle_hash"), Seq("f"), "left_semi")
       .agg(count_distinct(col("doc_id")).as("probe_docs_touched"))
-    gramTotals.crossJoin(probeDocs)
+    gramTotals.crossJoin(broadcast(probeDocs))
       .select(col("grams_surviving_prune"), col("grams_over_cap"),
         col("occurrences_dropped"), col("probe_docs_touched"))
   }

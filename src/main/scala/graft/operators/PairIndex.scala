@@ -263,11 +263,6 @@ object PairIndex {
     keepLatest(spark, key,
       Seq(idx.survivorsTable, idx.pairsTable) ++ idx.postingsTable ++ idx.dfTable)
 
-  def dropCorpusIndex(spark: SparkSession, idx: CorpusIndex): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `${idx.hashesTable}`")
-    spark.sql(s"DROP TABLE IF EXISTS `${idx.shinglesTable}`")
-  }
-
   /** Bucket count for a corpus artifact set when the caller doesn't
     * pin one (round-13): Catalyst's pre-scan size estimate of the
     * input divided by a per-bucket input target, clamped to
@@ -568,18 +563,11 @@ object PairIndex {
     import org.apache.spark.storage.StorageLevel
     // per-phase wall is ALWAYS exported to Telemetry (round-13, VERDICT
     // item 7) so a bench regression in the advance is attributable from
-    // BENCH_wall.json without a debug rerun; the env flag only adds the
-    // live print + job-description tagging for UI drill-down
-    val __dbg = sys.env.get("SPARK_GRAFT_ADV_DEBUG").contains("1")
+    // BENCH_wall.json without a debug rerun
     def ph[T](name: String)(f: => T): T = {
-      if (__dbg) spark.sparkContext.setJobDescription(s"adv:$name")
       val t0 = System.nanoTime(); val r = f
-      val ms = (System.nanoTime() - t0) / 1000000L
-      graft.Telemetry.record(s"pairindex.advance_ms_$name", ms)
-      if (__dbg) {
-        println(f"ADVPHASE $name%-24s ${ms / 1e3}%8.2f s")
-        spark.sparkContext.setJobDescription(null)
-      }
+      graft.Telemetry.record(s"pairindex.advance_ms_$name",
+        (System.nanoTime() - t0) / 1000000L)
       r
     }
     val postingsTable = idx.postingsTable.getOrElse(throw new IllegalArgumentException(
@@ -745,8 +733,9 @@ object PairIndex {
     // perturbs), and the current capped posting mass (→ mean capped
     // per-doc cardinality c̄, the score-granularity scale). These three
     // scalars are what `driftEstimate` accumulates — the cheap online
-    // stand-in for the DriftLadder's exact-reference drift measurement.
-    // `driftStats = false` skips the aggregation for a rung that wants
+    // stand-in for an exact-reference drift measurement (recorded in
+    // benchlogs_r14/drift_ladder_*.json and benchlogs_r15/drift_ladder_*.json).
+    // `driftStats = false` skips the aggregation for a caller that wants
     // the bare advance wall.
     val flipCond = col("__dfo0") >= 1 &&
       ((col("__dfo0") <= cap) =!= (col("__dfc") <= cap))
@@ -792,7 +781,7 @@ object PairIndex {
     // TIME (when the corpus statistics it depends on are current) and
     // accumulated on the artifact, so reading the estimate later is a
     // pure TBLPROPERTIES lookup — O(1), no job. Model (validated
-    // against the DriftLadder's measured drift, both shapes):
+    // against measured drift, both ladder shapes, benchlogs_r15):
     //   - a flip perturbs the capped shingle sets of its ~h holder docs
     //     (h = the flip's smaller-side df — the docs that gain/lose the
     //     shingle from their capped universe);
@@ -1205,7 +1194,7 @@ object PairIndex {
   // upper bound — the flipped shingle is often outside the pair's
   // intersection, and cardinality shifts partially cancel in J) and
   // the near-threshold score density. Fitted ONCE against the sf1
-  // mod-64 daily DriftLadder (raw-model-vs-measured ×15.5 for the
+  // mod-64 daily drift ladder (raw-model-vs-measured ×15.5 for the
   // mean, stable to ±2% across all 7 chained batches — the shape is
   // right, only the constant was off; spurious geomean ×59.5 over the
   // raw model) and then VALIDATED — not refitted — at every k of both
@@ -1224,18 +1213,15 @@ object PairIndex {
     * tolerance (presence-grade consumers instead budget on
     * `estSpuriousFrac` — `pairs_missing` is structurally 0 in frozen
     * mode, the ladder-proved superset property). The estimator is
-    * VALIDATED against measured drift by `tools.DriftLadder`, which
-    * builds the exact reference this estimator exists to avoid. */
+    * VALIDATED against measured drift from an exact reference build —
+    * the build this estimator exists to avoid (benchlogs_r15/
+    * drift_ladder_*.json). */
   final case class DriftEstimate(
       frozenAdvances: Long, untrackedAdvances: Long,
       capFlips: Long, flipHolders: Long,
       estMeanScoreDrift: Double, estSpuriousFrac: Double) {
     def rebuildDue(meanScoreTolerance: Double): Boolean =
       estMeanScoreDrift >= meanScoreTolerance
-    /** Conservative presence-grade trigger: rebuild when the estimated
-      * over-drop (spurious-pair) fraction exceeds the budget. */
-    def rebuildDueSpurious(spuriousFracBudget: Double): Boolean =
-      estSpuriousFrac >= spuriousFracBudget
   }
 
   def driftEstimate(spark: SparkSession, idx: DocIndex): DriftEstimate = {

@@ -265,8 +265,8 @@ object VectorQueries {
     * cutting pair fan-out ~28× and keeping the measured growth at the
     * design's N^1.5 instead of the pinned-cell N²/16 cliff; the
     * mirror computes the identical count from the same table. The
-    * decade BENCH protocol still records e08 as the corpus-scale
-    * stand-in (tools/run_decade_chunk.sh). Candidate pairs must
+    * decade bench records e08 as the corpus-scale stand-in
+    * (BENCH_sf10.json). Candidate pairs must
     * share a cell, so the plan is a shuffled equi-join on cell_id,
     * never a cartesian/BroadcastNestedLoopJoin. Approximate (a pair
     * split across cells is missed) but deterministic, with the full

@@ -17,6 +17,20 @@ class ExplainRegressionSpec extends AnyFunSuite with SparkTestSession {
   private def plan(name: String): String =
     Registry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
 
+  /** Runs `body` with Spark's default 10 MB static broadcast threshold.
+    * The shared session turns static broadcasts off, so a plan read
+    * there can never hold a size-chosen broadcast; a test that guards
+    * against one (the hint it pins must win for a caller that keeps
+    * Spark's default) has to plan under the default. */
+  private def withStaticBroadcasts[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "10485760")
+      body
+    } finally spark.conf.set(key, prev)
+  }
+
   /** Post-execution plan — AQE rewrites (exchange reuse surfaces as
     * reused query stages) only exist in the finalized adaptive plan. */
   private def executedPlan(name: String): String = {
@@ -48,7 +62,7 @@ class ExplainRegressionSpec extends AnyFunSuite with SparkTestSession {
     // salted dim must NOT silently broadcast (which would bypass the
     // salt), and the join key must include the salt column so each hot
     // key spreads across reducers
-    val p = plan("q32_salted_join")
+    val p = withStaticBroadcasts(plan("q32_salted_join"))
     assert(p.contains("ShuffledHashJoin") || p.contains("SortMergeJoin"),
       s"salted join is not a shuffle join:\n$p")
     assert(p.contains("__salt"), s"salt column missing from plan:\n$p")
@@ -114,7 +128,7 @@ class ExplainRegressionSpec extends AnyFunSuite with SparkTestSession {
     // cardinalities through the posting structs and has no such joins
     // (see the carded-kernel test above).
     for (q <- Seq("d13_incremental_dedup")) {
-      val p = plan(q)
+      val p = withStaticBroadcasts(plan(q))
       assert("BroadcastHashJoin .*, Inner".r.findFirstIn(p).isEmpty,
         s"$q: an inner join planned as broadcast despite the merge hint:\n$p")
       assert("SortMergeJoin .*, Inner".r.findAllIn(p).size >= 2,

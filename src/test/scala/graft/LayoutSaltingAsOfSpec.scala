@@ -13,20 +13,16 @@ class LayoutSaltingAsOfSpec extends AnyFunSuite with SparkTestSession {
     val dir = "/root/testdata/sf0.001"
     Layout.writeBucketed(Tables.orders(spark, dir), "orders_b", "o_orderkey", 4)
     Layout.writeBucketed(Tables.lineitem(spark, dir), "lineitem_b", "l_orderkey", 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = Layout.readTable(spark, "orders_b")
-        .join(Layout.readTable(spark, "lineitem_b"),
-          col("o_orderkey") === col("l_orderkey"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"expected shuffle-free plan:\n$plan")
-      assert(joined.count() > 0)
-      // same result as the unbucketed join
-      val plain = Tables.orders(spark, dir).join(
-        Tables.lineitem(spark, dir), col("o_orderkey") === col("l_orderkey"))
-      assert(joined.count() === plain.count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    val joined = Layout.readTable(spark, "orders_b")
+      .join(Layout.readTable(spark, "lineitem_b"),
+        col("o_orderkey") === col("l_orderkey"))
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"expected shuffle-free plan:\n$plan")
+    assert(joined.count() > 0)
+    // same result as the unbucketed join
+    val plain = Tables.orders(spark, dir).join(
+      Tables.lineitem(spark, dir), col("o_orderkey") === col("l_orderkey"))
+    assert(joined.count() === plain.count())
   }
 
   test("writeBucketed clears an orphaned location via the Hadoop FileSystem") {
@@ -73,15 +69,11 @@ class LayoutSaltingAsOfSpec extends AnyFunSuite with SparkTestSession {
       Seq((3L, "c"), (4L, "d")).toDF("k", "v"), "layout_app_t", "k", 4)
     Layout.writeBucketed(
       (1L to 4L).map(k => (k, k * 10)).toDF("k", "w"), "layout_app_probe", "k", 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("layout_app_t")
-        .join(spark.table("layout_app_probe"), "k")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"append broke co-location:\n$plan")
-      assert(joined.count() === 4)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    val joined = spark.table("layout_app_t")
+      .join(spark.table("layout_app_probe"), "k")
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"append broke co-location:\n$plan")
+    assert(joined.count() === 4)
   }
 
   test("partitioned layout prunes non-matching partitions at scan") {
@@ -109,21 +101,17 @@ class LayoutSaltingAsOfSpec extends AnyFunSuite with SparkTestSession {
     val index = graft.operators.Ivf.build(emb, k = 8, iters = 1)
     Layout.writeBucketed(
       index.assigned.select("vec_id", "cell_id"), "ivf_assigned_b", "cell_id", 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val t = Layout.readTable(spark, "ivf_assigned_b")
-      val pairs = t.as("a").join(t.as("b"),
+    val t = Layout.readTable(spark, "ivf_assigned_b")
+    val pairs = t.as("a").join(t.as("b"),
+      col("a.cell_id") === col("b.cell_id") && col("a.vec_id") < col("b.vec_id"))
+    val plan = pairs.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"expected shuffle-free pair join:\n$plan")
+    // same pairs as the unbucketed join
+    val plain = index.assigned.select("vec_id", "cell_id")
+    assert(pairs.count() ===
+      plain.as("a").join(plain.as("b"),
         col("a.cell_id") === col("b.cell_id") && col("a.vec_id") < col("b.vec_id"))
-      val plan = pairs.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"expected shuffle-free pair join:\n$plan")
-      // same pairs as the unbucketed join
-      val plain = index.assigned.select("vec_id", "cell_id")
-      assert(pairs.count() ===
-        plain.as("a").join(plain.as("b"),
-          col("a.cell_id") === col("b.cell_id") && col("a.vec_id") < col("b.vec_id"))
-          .count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        .count())
   }
 
   test("salted join returns exactly the unsalted result under skew") {

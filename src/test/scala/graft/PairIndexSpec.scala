@@ -19,19 +19,15 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     survivorsTable = "pis_survivors", pairsTable = "pis_pairs")
 
   test("drop-list anti join plans with NO exchange off the bucketed tables") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val anti = spark.table(idx.survivorsTable)
-        .join(PairIndex.droplist(spark, idx, "doc_id"), Seq("doc_id"), "left_anti")
-      val plan = anti.queryExecution.executedPlan.toString
-      // both the droplist's distinct and the anti join must ride the
-      // bucketed scans' partitioning: any Exchange here means the
-      // shared index failed at its one job (no corpus re-shuffle per
-      // consumer)
-      assert(!plan.contains("Exchange"), s"expected shuffle-free consumer:\n$plan")
-      assert(anti.count() > 0)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    val anti = spark.table(idx.survivorsTable)
+      .join(PairIndex.droplist(spark, idx, "doc_id"), Seq("doc_id"), "left_anti")
+    val plan = anti.queryExecution.executedPlan.toString
+    // both the droplist's distinct and the anti join must ride the
+    // bucketed scans' partitioning: any Exchange here means the
+    // shared index failed at its one job (no corpus re-shuffle per
+    // consumer)
+    assert(!plan.contains("Exchange"), s"expected shuffle-free consumer:\n$plan")
+    assert(anti.count() > 0)
   }
 
   test("curateFromIndex == CorpusPipeline.curate on the same corpus") {
@@ -759,14 +755,10 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       numBuckets = 4, keepPostings = true)
     assertTablesEqual(r.idx, scratch)
     // and the grown index stays consumable with zero exchanges
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val anti = spark.table(r.idx.survivorsTable)
-        .join(PairIndex.droplist(spark, r.idx, "doc_id"), Seq("doc_id"), "left_anti")
-      val plan = anti.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"expected shuffle-free consumer:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    val anti = spark.table(r.idx.survivorsTable)
+      .join(PairIndex.droplist(spark, r.idx, "doc_id"), Seq("doc_id"), "left_anti")
+    val plan = anti.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"expected shuffle-free consumer:\n$plan")
     PairIndex.dropDocIndex(spark, idx)
     PairIndex.dropDocIndex(spark, r.idx)
     PairIndex.dropDocIndex(spark, scratch)
@@ -981,14 +973,10 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     assert(props1 === props0)
     // the hot consumer still plans with zero exchanges off the
     // compacted artifacts
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val anti = spark.table(compacted.survivorsTable)
-        .join(PairIndex.droplist(spark, compacted, "doc_id"), Seq("doc_id"), "left_anti")
-      val plan = anti.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"expected shuffle-free consumer:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    val anti = spark.table(compacted.survivorsTable)
+      .join(PairIndex.droplist(spark, compacted, "doc_id"), Seq("doc_id"), "left_anti")
+    val plan = anti.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"expected shuffle-free consumer:\n$plan")
     PairIndex.dropDocIndex(spark, idx0)
     PairIndex.dropSuperseded(spark, r2.idx, compacted)
     PairIndex.dropDocIndex(spark, compacted)

@@ -3,20 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the suite (guide: lazy val, not
-  * per-test). */
+  * per-test), built from the same configuration as Bench and Verify
+  * plus a throwaway warehouse. */
 trait SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = GraftSession.builder()
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    // aggressive periodic GC: localCheckpoint blocks (the advance path
-    // makes several per call) are only released when ContextCleaner
-    // sees their RDDs garbage-collected — the 30 min default let a
-    // 16-advance suite accumulate blocks until heap death
-    .config("spark.cleaner.periodicGC.interval", "30s")
     .getOrCreate()
 }
