@@ -12,10 +12,17 @@ case class OmdbRecord(
     imdbRating: Option[String],
     runtime: Option[String])
 
+/** A provider error worth retrying: HTTP 429 (over quota) or a 5xx. */
+final class TransientEnrichmentError(val code: Int)
+  extends RuntimeException(s"transient enrichment error: HTTP $code")
+
 /** S4/S5: the external REST point-lookup source behind an interface so
   * the operator is testable offline (FIXTURES.md §E) and swappable for
-  * any enrichment backend. Implementations must be Serializable — one
-  * instance is constructed per executor partition inside mapPartitions.
+  * any enrichment backend. Implementations must be Serializable (the
+  * instance is shipped to the enrichment task) and thread-safe: the
+  * task calls one instance from several threads at once. `None` means
+  * the provider has no such movie; a thrown exception means the call
+  * failed and is retried (see [[Enrich]]).
   */
 trait EnrichmentClient extends Serializable {
   /** Strategy 1 (etl1.py:192-207): search by title + year. */
@@ -62,9 +69,10 @@ object OmdbJson {
 
 /** Real OMDb HTTP client (S4/S5 params per etl1.py:147-151,186-190;
   * 10 s timeout etl1.py:153). Uses JDK HttpClient + the Jackson already
-  * on Spark's classpath. The HTTP leg is not exercised in the offline
-  * test environment — the operator is validated through the stub and
-  * OmdbJson.parse — but it is the production binding.
+  * on Spark's classpath. A 429 or 5xx throws [[TransientEnrichmentError]]
+  * so the call is retried; any other non-200 and a `Response:"False"`
+  * body are a miss. Tested against a local HTTP server through
+  * `baseUrl`.
   */
 class OmdbHttpClient(apiKey: String,
                      baseUrl: String = "https://www.omdbapi.com/")
@@ -81,7 +89,9 @@ class OmdbHttpClient(apiKey: String,
       .uri(java.net.URI.create(s"$baseUrl?$qs"))
       .timeout(java.time.Duration.ofSeconds(10)).GET().build()
     val resp = http.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
-    if (resp.statusCode() != 200) return None
+    val code = resp.statusCode()
+    if (code == 429 || code >= 500) throw new TransientEnrichmentError(code)
+    if (code != 200) return None
     OmdbJson.parse(resp.body())
   }
 

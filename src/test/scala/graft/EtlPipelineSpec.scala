@@ -6,6 +6,7 @@ import graft.quality.DataQuality
 import graft.queries.CanonicalQueries
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** End-to-end golden run (SURVEY.md §5.2.3) on the real MovieLens data
   * at /root/reference/data with the deterministic offline stub
@@ -281,6 +282,28 @@ class EtlPipelineSpec extends AnyFunSuite with SparkTestSession {
     assert(att(2) === "title_only")
     assert(att(3) === "title_year,title_only,imdb_id")
     r.release()
+  }
+
+  test("key memo: a repeated title costs one call; no enrich thread outlives run") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo").toString
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "movies.csv"),
+      """movieId,title,genres
+        |1,Delta,Drama
+        |2,Delta,Comedy
+        |""".stripMargin)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "ratings.csv"),
+      """userId,movieId,rating,timestamp
+        |1,1,4.0,828124615
+        |""".stripMargin)
+    CountingStub.calls.set(0)
+    val r = MoviePipeline.run(spark, dir, new CountingStub, cap = 2)
+    // neither movie has a year or a link: one title-only lookup, shared
+    assert(CountingStub.calls.get() === 1)
+    assert(r.misses.count() === 2L)
+    r.release()
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("graft-enrich-") && t.isAlive)
+    assert(alive.isEmpty, alive.map(_.getName).mkString(", "))
   }
 }
 
